@@ -23,11 +23,15 @@ import org.apache.spark.sql.functions._
   *
   * Scale contract: the pass-through shuffle uses an explicit
   * partition count, which AQE leaves alone (REPARTITION_BY_NUM
-  * origin) — so per-key skew is the CALLER's to manage: one
-  * partition per leading-key value is right when values are few and
-  * balanced (the |Q|-way selective-search sorts); a deployment with
-  * a wide or skewed domain should pass a finer `pid` (e.g.
-  * key * k + hash-bucket folded over a secondary sort prefix) or
+  * origin) — so per-key skew is the CALLER's to manage. The count
+  * should follow the workers, not the key domain:
+  * [[denseIdSortKnownBounds]] folds a known id range into
+  * `defaultParallelism` contiguous ceil-width ranges (the
+  * selective-search sorts use it over their dense query ids), where
+  * one partition per key value would schedule |Q| tasks and write
+  * maps x |Q| shuffle files per sort. A deployment with a skewed
+  * domain should pass a finer `pid` (e.g. key * k + hash-bucket
+  * folded over a secondary sort prefix, or `partsMultiplier`) or
   * fall back to the sampling sort. Rows whose pid falls outside
   * [0, numParts) fail loudly in-plan rather than silently misroute.
   */

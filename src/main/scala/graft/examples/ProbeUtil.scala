@@ -12,11 +12,14 @@ import org.apache.spark.sql.SparkSession
   */
 object ProbeUtil {
 
-  /** Identical knobs to graft.Bench's session (minus env overrides). */
+  /** graft.Bench's session knobs (minus env overrides), with the task
+    * slots and shuffle partitions sized to the host's cores.
+    */
   def benchSession(appName: String): SparkSession = {
-    val spark = SparkSession.builder().master("local[32]")
+    val cores = Runtime.getRuntime.availableProcessors()
+    val spark = SparkSession.builder().master(s"local[$cores]")
       .appName(appName)
-      .config("spark.sql.shuffle.partitions", "32")
+      .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "2m")

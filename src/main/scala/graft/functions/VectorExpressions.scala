@@ -32,6 +32,19 @@ object VectorKernels {
     }
     acc
   }
+
+  /** `n2 * cn2` as a double for the cosine denominator: the exact long
+    * product rounded once — bit-identical to the SQL
+    * `CAST(n2 * cn2 AS DOUBLE)` the oracles replay — while it fits in
+    * a long, else the double product (one more rounding) instead of
+    * the silently wrapped long. Extreme-norm vectors (the product
+    * reaching 2^63) thus still rank by their true cosine.
+    */
+  def normProduct(n2: Long, cn2: Long): Double = {
+    val lo = n2 * cn2
+    if (Math.multiplyHigh(n2, cn2) == (lo >> 63)) lo.toDouble
+    else n2.toDouble * cn2.toDouble
+  }
 }
 
 /** `dot_long(a, b)`: exact integer dot product of two `array<long>`
@@ -70,7 +83,7 @@ case class DotLong(left: Expression, right: Expression) extends BinaryExpression
   * planning tax, none of it data work. This node is ~3 Catalyst nodes
   * holding the table as plain JVM arrays (shipped once via the
   * codegen references array), and its kernel is the SAME arithmetic:
-  * cos = dot(v, cv) / sqrt((n2 * cn2).toDouble) with NaN -> -Infinity
+  * cos = dot(v, cv) / sqrt(n2 * cn2) with NaN -> -Infinity
   * (the [[graft.operators.Similarity]] assignCos contract), ranked by
   * java.lang.Double.compare with cent_id ties ascending —
   * line-for-line the already-pinned driver mirror
@@ -121,15 +134,7 @@ case class NearestCellsK(left: Expression, right: Expression,
       var dot = 0L
       var i = 0
       while (i < lim) { dot += v.getLong(i) * cv(i); i += 1 }
-      // NOTE (ADVICE r21): the denominator long product can wrap for
-      // extreme-norm corpora (n2 * cn2 >= 2^63), where the joined
-      // path's BIGINT product throws under ANSI instead — the same
-      // quirk Similarity.driverNearestCells documents. Kept as the
-      // single rounding (exact long product -> one double) so the
-      // cosine doubles stay bit-identical to the SQL
-      // sqrt(cast(n2*cn2 as double)) the oracle replays; quantized
-      // norms at the registered scales stay far below the cliff.
-      val raw = dot.toDouble / math.sqrt((n2 * norms(j)).toDouble)
+      val raw = dot.toDouble / math.sqrt(VectorKernels.normProduct(n2, norms(j)))
       ncs(j) = if (java.lang.Double.isNaN(raw)) Double.PositiveInfinity else -raw
       j += 1
     }
@@ -219,7 +224,7 @@ case class TwoLevelCellsK(left: Expression, right: Expression,
     var dot = 0L
     var i = 0
     while (i < lim) { dot += v.getLong(i) * cv(i); i += 1 }
-    val raw = dot.toDouble / math.sqrt((n2 * cn2).toDouble)
+    val raw = dot.toDouble / math.sqrt(VectorKernels.normProduct(n2, cn2))
     if (java.lang.Double.isNaN(raw)) Double.PositiveInfinity else -raw
   }
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.DataUtils.ensureHasColumns
-import graft.core.{DataUtils, Schemas}
+import graft.core.Schemas
 
 /** Selective-search post-processing: shard/bucket selection, merging,
   * evaluation, and TREC export (reference: dataproc/selectivesearch.py).
@@ -32,10 +32,14 @@ object SelectiveSearch {
     * ids are dense integers in [0, nq) — true for every loader in
     * this module, whose selection frames are built over an explicit
     * query list. The sort then routes rows by query id directly
-    * ([[graft.core.StaticRange]]) instead of planning a range
-    * exchange whose RangePartitioner samples — and thereby
-    * re-executes — the whole join pipeline beneath the sort once per
-    * action. `None` keeps the sampling sort for arbitrary id spaces.
+    * ([[graft.core.StaticRange.denseIdSortKnownBounds]]) instead of
+    * planning a range exchange whose RangePartitioner samples — and
+    * thereby re-executes — the whole join pipeline beneath the sort
+    * once per action. The routing splits [0, nq) into
+    * `defaultParallelism` contiguous ranges, so the partition count
+    * follows the cores, not |Q| (one partition per query would
+    * schedule |Q| sort tasks and write maps x |Q| shuffle files per
+    * call). `None` keeps the sampling sort for arbitrary id spaces.
     */
   private def sortedByQueryScore(df: DataFrame,
       queryDomain: Option[Int] = None): DataFrame = {
@@ -44,7 +48,8 @@ object SelectiveSearch {
     val sortCols = col("query").asc +: col("score").desc +: tiebreak
     queryDomain match {
       case Some(nq) =>
-        graft.core.StaticRange.sortByKnownDomain(df, col("query"), nq, sortCols)
+        graft.core.StaticRange.denseIdSortKnownBounds(
+          df, Some((0L, nq - 1L)), "query", sortCols)
       case None => df.orderBy(sortCols: _*)
     }
   }
@@ -536,47 +541,87 @@ object SelectiveSearch {
   }
 
   /** Loads shard scores for the given queries
-    * (reference: dataproc/selectivesearch.py:76-83).
-    *
-    * The scores CSV carries no keys — the reference binds it to the
-    * (query x shard) cartesian frame by row position. Here both sides
-    * get an explicit position: the cartesian side arithmetically
-    * (`pos = qIdx * nshards + shard`), the CSV side by line number
-    * (single-partition text read, stable order), then an equi-join on
-    * position replaces the fragile positional bind (SURVEY.md §7
-    * hard-part 1).
+    * (reference: dataproc/selectivesearch.py:76-83): (query, shard,
+    * shard_score, rank). See [[loadSelection]] for the positional bind
+    * and the ranking.
     */
   def loadShardSelection(spark: SparkSession, queries: Seq[Long], nshards: Int,
       shardScoresPath: String): DataFrame =
     loadSelection(spark, queries, nshards, None, shardScoresPath)
 
-  /** Bucket-level variant (reference: dataproc/selectivesearch.py:85-93). */
+  /** Bucket-level variant (reference: dataproc/selectivesearch.py:85-93):
+    * (query, shard, bucket, shard_score, rank).
+    */
   def loadBucketSelection(spark: SparkSession, queries: Seq[Long], nshards: Int,
       nbuckets: Int, shardScoresPath: String): DataFrame =
     loadSelection(spark, queries, nshards, Some(nbuckets), shardScoresPath)
 
+  /** The selection frame, built on the driver.
+    *
+    * The scores file carries no keys — the reference binds it to the
+    * (query x shard [x bucket]) cartesian frame by row position. Here
+    * line `i` (0-based, file order) binds to cartesian position `i`,
+    * query-major, by arithmetic (SURVEY.md §7 hard-part 1):
+    * `query = queries(i / (S·B))`, `shard = (i / B) % S`,
+    * `bucket = i % B`. Lines past |Q|·S·B have no position and are
+    * dropped; positions past the file's last line get no row (inner-
+    * join semantics).
+    *
+    * `rank` is the 0-based per-query order by `shard_score` descending
+    * under Spark's SQL double ordering (NaN first, -0.0 == 0.0), ties
+    * by position: pandas' `rank(method='first')` over the cartesian
+    * input order.
+    *
+    * Driver-local by design: every consumer broadcasts this frame, so
+    * it must fit on the driver anyway. Built here it costs no Spark
+    * job, where a relational bind costs a text scan, a position join
+    * and a per-query window shuffle that each consumer re-runs. Query
+    * ids must be distinct and fit in an int (the frame's `query`
+    * type).
+    */
   private def loadSelection(spark: SparkSession, queries: Seq[Long], nshards: Int,
       nbuckets: Option[Int], shardScoresPath: String): DataFrame = {
-    import spark.implicits._
-    val ranges = Seq(queries, (0L until nshards.toLong)) ++
-      nbuckets.map(nb => (0L until nb.toLong)).toSeq
-    val names = Seq("query", "shard") ++ nbuckets.map(_ => "bucket").toSeq
-    val cart = DataUtils.cartesianWithPos(spark, ranges, names)
-    // Single-partition line read keeps file order; zipWithIndex gives
-    // the line number. The scores file is (queries x shards x buckets)
-    // lines — tiny relative to results, fine on one partition.
-    val scores = spark.sparkContext.textFile(shardScoresPath, 1)
-      .zipWithIndex()
-      .map { case (line, idx) => (idx, line.trim.toDouble) }
-      .toDF("pos", "shard_score")
-    val bound = cart.join(scores, Seq("pos"), "inner").drop("pos")
-    // pandas rank(method='first', desc) ties by input (= cartesian)
-    // order -> tiebreak by (shard[, bucket]) ascending, which equals
-    // position order within a query.
-    val tiebreak = (Seq("shard") ++ nbuckets.map(_ => "bucket").toSeq).map(col(_).asc)
-    val w = Window.partitionBy(col("query"))
-      .orderBy(col("shard_score").desc +: tiebreak: _*)
-    bound.withColumn("rank", (row_number().over(w) - 1).cast("int"))
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
+    import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
+    require(queries.distinct.size == queries.size,
+      s"duplicate query ids: ${queries.diff(queries.distinct).distinct.mkString(", ")}")
+    require(queries.forall(q => q >= Int.MinValue && q <= Int.MaxValue),
+      "query ids must fit in an int")
+    val nb = nbuckets.getOrElse(1)
+    val perQuery = if (nshards > 0 && nb > 0) nshards.toLong * nb else 0L
+    val scores = readLines(spark, shardScoresPath).map(_.trim.toDouble)
+    val rows = queries.iterator.zipWithIndex.flatMap { case (q, qi) =>
+      val from = math.min(scores.length.toLong, qi * perQuery).toInt
+      val until = math.min(scores.length.toLong, (qi + 1) * perQuery).toInt
+      val byScore = (from until until).sortWith { (a, b) =>
+        val c = compareDoubles(scores(a), scores(b))
+        c > 0 || (c == 0 && a < b)
+      }
+      byScore.iterator.zipWithIndex.map { case (pos, rank) =>
+        Row.fromSeq(Seq(q.toInt, pos / nb % nshards) ++
+          nbuckets.map(_ => pos % nb) ++ Seq[Any](scores(pos), rank))
+      }
+    }.toList
+    val keys = Seq("query", "shard") ++ nbuckets.map(_ => "bucket")
+    spark.createDataFrame(rows.asJava, StructType(
+      keys.map(StructField(_, IntegerType, nullable = false)) ++ Seq(
+        StructField("shard_score", DoubleType, nullable = false),
+        StructField("rank", IntegerType, nullable = false))))
+  }
+
+  /** The lines of one text file, in file order, through the Hadoop
+    * FileSystem of `path` (the file systems `textFile` reads).
+    */
+  private def readLines(spark: SparkSession, path: String): Array[String] = {
+    import org.apache.hadoop.fs.Path
+    val p = new Path(path)
+    val in = new java.io.BufferedReader(new java.io.InputStreamReader(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p),
+      java.nio.charset.StandardCharsets.UTF_8))
+    try Iterator.continually(in.readLine()).takeWhile(_ != null).toArray
+    finally in.close()
   }
 
   /** Writes `results` as a `trec_eval` run file: six tab-separated

@@ -2,10 +2,11 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SaveMode
+import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Schemas
+import graft.core.{DataUtils, Schemas}
 import graft.selectivesearch.SelectiveSearch
 
 /** I/O contracts: shard-results loader (S1), scores-CSV positional
@@ -56,6 +57,83 @@ class IoSuite extends SparkSuite {
     assertRowsEqual(sel.select("query", "shard", "bucket", "shard_score", "rank"), Seq(
       Seq(7, 0, 0, 0.5, 1), Seq(7, 0, 1, 0.5, 2),
       Seq(7, 1, 0, 0.7, 0), Seq(7, 1, 1, 0.1, 3)))
+  }
+
+  /** The relational selection loader the driver-side one replaced,
+    * kept as its oracle: the cartesian frame with arithmetic positions,
+    * line numbers from a one-partition text read, an equi-join on
+    * position and a per-query row_number window.
+    */
+  private def relationalSelection(queries: Seq[Long], nshards: Int,
+      nbuckets: Option[Int], path: String): DataFrame = {
+    val ranges = Seq(queries, 0L until nshards.toLong) ++
+      nbuckets.map(nb => 0L until nb.toLong)
+    val names = Seq("query", "shard") ++ nbuckets.map(_ => "bucket")
+    val cart = DataUtils.cartesianWithPos(spark, ranges, names)
+    val scores = spark.sparkContext.textFile(path, 1)
+      .zipWithIndex()
+      .map { case (line, idx) => (idx, line.trim.toDouble) }
+      .toDF("pos", "shard_score")
+    val bound = cart.join(scores, Seq("pos"), "inner").drop("pos")
+    val tiebreak = names.tail.map(col(_).asc)
+    val w = Window.partitionBy(col("query"))
+      .orderBy(col("shard_score").desc +: tiebreak: _*)
+    bound.withColumn("rank", (row_number().over(w) - 1).cast("int"))
+  }
+
+  test("loadSelection: driver-side bind equals the relational loader on random score files") {
+    import Ordering.Implicits._
+    val rnd = new scala.util.Random(11)
+    // ties, NaN (ranks first), signed zeros (rank equal) and infinities
+    val specials = Seq(Double.NaN, -0.0, 0.0, 0.5, Double.PositiveInfinity,
+      Double.NegativeInfinity)
+    def score(): String = {
+      val d = if (rnd.nextInt(3) == 0) specials(rnd.nextInt(specials.size))
+        else rnd.nextInt(5) / 4.0
+      if (rnd.nextInt(8) == 0) s" $d " else d.toString
+    }
+    // collected rows keyed by (query, shard[, bucket]); scores by their
+    // bits, so -0.0 and 0.0 differ and NaN equals NaN
+    def rows(df: DataFrame, keys: Int): Seq[Seq[Any]] =
+      df.collect().toSeq.map(_.toSeq.map {
+        case d: Double => java.lang.Double.doubleToLongBits(d)
+        case x => x
+      }).sortBy(_.take(keys).map(_.asInstanceOf[Int]))
+    val nshards = 4
+    for {
+      queries <- Seq(Seq(0L, 1L, 2L), Seq(7L, 3L, 100L), Seq(-5L))
+      nbuckets <- Seq(None, Some(3))
+      lenDelta <- Seq(-7, 0, 5)
+    } {
+      val positions = queries.size * nshards * nbuckets.getOrElse(1)
+      val n = math.max(0, positions + lenDelta)
+      val path = s"$work/rand-${queries.mkString("_")}-${nbuckets.getOrElse(0)}-$lenDelta.csv"
+      val eol = if (rnd.nextBoolean()) "\n" else "\r\n"
+      val trailing = if (rnd.nextBoolean()) eol else ""
+      Files.write(Paths.get(path),
+        (Seq.fill(n)(score()).mkString(eol) + trailing).getBytes)
+      val got = nbuckets match {
+        case None => SelectiveSearch.loadShardSelection(spark, queries, nshards, path)
+        case Some(nb) =>
+          SelectiveSearch.loadBucketSelection(spark, queries, nshards, nb, path)
+      }
+      val want = relationalSelection(queries, nshards, nbuckets, path)
+      val keys = if (nbuckets.isDefined) 3 else 2
+      val ctx = s"queries=$queries buckets=$nbuckets lines=$n"
+      assert(got.schema == want.schema, ctx)
+      assert(rows(got, keys) == rows(want, keys), ctx)
+      assert(got.count() == math.min(n, positions), ctx)
+    }
+  }
+
+  test("loadSelection: duplicate or non-int query ids fail loudly") {
+    Files.write(Paths.get(s"$work/dup.csv"), Seq.fill(6)("0.5").mkString("\n").getBytes)
+    for (queries <- Seq(Seq(1L, 2L, 1L), Seq(1L << 40))) {
+      intercept[IllegalArgumentException](
+        SelectiveSearch.loadShardSelection(spark, queries, 2, s"$work/dup.csv"))
+      intercept[IllegalArgumentException](
+        SelectiveSearch.loadBucketSelection(spark, queries, 1, 2, s"$work/dup.csv"))
+    }
   }
 
   test("PlotExport writes a tidy sorted x,y,label CSV (evaluate output shape)") {

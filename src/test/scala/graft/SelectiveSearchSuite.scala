@@ -160,6 +160,35 @@ class SelectiveSearchSuite extends SparkSuite {
     assert(a == b)
   }
 
+  test("known-domain sorts equal orderBy row for row on core-sized partitions") {
+    // 100 queries on the suite's local[4]: the query-domain route sorts
+    // into contiguous query ranges, one per core, not one per query
+    val rnd = new scala.util.Random(5)
+    val nq = 100
+    val res = (for {
+      q <- 0 until nq; s <- 0 until 4; b <- 0 until 2; d <- 0 until 3
+    } yield (q, s, b, rnd.nextInt(6).toDouble, ((q * 4 + s) * 2 + b) * 3L + d))
+      .toDF("query", "shard", "bucket", "score", "gdocid")
+    val sel = (0 until nq).flatMap { q =>
+      rnd.shuffle((0 until 4).toList).zipWithIndex.map { case (s, r) => (q, s, r) }
+    }.toDF("query", "shard", "rank")
+    val bsel = (0 until nq).flatMap { q =>
+      rnd.shuffle((for { s <- 0 until 4; b <- 0 until 2 } yield (s, b)).toList)
+        .zipWithIndex.map { case ((s, b), r) => (q, s, b, r) }
+    }.toDF("query", "shard", "bucket", "rank")
+    val cases = Seq[Option[Int] => DataFrame](
+      dom => SelectiveSearch.select(sel, res, 2, dom),
+      dom => SelectiveSearch.selectWithDecay(sel, res, 3, 0.5, dom),
+      dom => SelectiveSearch.selectBuckets(bsel, res, 3, dom))
+    for (run <- cases) {
+      val routed = run(Some(nq))
+      val sorted = run(None).collect().toSeq
+      assert(sorted.nonEmpty)
+      assert(routed.collect().toSeq == sorted)
+      assert(routed.rdd.getNumPartitions <= spark.sparkContext.defaultParallelism)
+    }
+  }
+
   test("missing columns raise MissingColumnException") {
     intercept[MissingColumnException](
       SelectiveSearch.select(selection.drop("rank"), results, 1))

@@ -902,6 +902,57 @@ class SimilaritySuite extends SparkSuite {
     // recovers the exact ranking when nothing is pruned
     assert(refined.map(t => (t._1, t._3, t._4, t._2)) == brute)
   }
+
+  test("cell kernels rank extreme-norm vectors by their true cosine") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import graft.functions.{NearestCellsK, TwoLevelCellsK, VectorKernels}
+    // squared norms near 2^61: every n2 * cn2 product is far past 2^63,
+    // while each dot product and norm still fits in a long
+    val rnd = new scala.util.Random(7)
+    def vec(): Array[Long] = Array.fill(2)(rnd.nextLong(2000000000L) - 1000000000L)
+    def n2(v: Array[Long]): Long = v.map(x => x * x).sum
+    def dot(a: Array[Long], b: Array[Long]): Long = a.zip(b).map { case (x, y) => x * y }.sum
+    val cents = Array.fill(12)(vec())
+    val ids = Array.tabulate(cents.length)(j => 100L + j)
+    val norms = cents.map(n2)
+    val supCents = Array.fill(3)(vec())
+    val supIds = Array(7L, 8L, 9L)
+    // the nearest centroids of v by (cosine desc, id asc), in double
+    // precision; `wrapped` is the silently wrapped long product
+    def nearest(v: Array[Long], cs: Array[Array[Long]], cids: Array[Long],
+        wrapped: Boolean = false): Seq[Long] =
+      cs.indices.map { j =>
+        val den = if (wrapped) (n2(v) * n2(cs(j))).toDouble
+          else n2(v).toDouble * n2(cs(j)).toDouble
+        val cos = dot(v, cs(j)).toDouble / math.sqrt(den)
+        (if (cos.isNaN) Double.PositiveInfinity else -cos, cids(j))
+      }.sortWith { case ((a, i), (b, k)) =>
+        val c = java.lang.Double.compare(a, b)
+        c < 0 || (c == 0 && i < k)
+      }.map(_._2)
+    val supOf = cents.map(c => nearest(c, supCents, supIds).head)
+    val flat = NearestCellsK(Literal(0L), Literal(0L), ids, cents, norms, cents.length)
+    val twoLevel = TwoLevelCellsK(Literal(0L), Literal(0L), supIds, supCents,
+      supCents.map(n2), 1, ids, cents, norms, supOf, cents.length)
+    val vs = Seq.fill(8)(vec())
+    // the wrap reorders the ranking, so these vectors do exercise it
+    assert(vs.exists(v => nearest(v, cents, ids, wrapped = true) != nearest(v, cents, ids)))
+    for (v <- vs) {
+      val in = new GenericArrayData(v)
+      val want = nearest(v, cents, ids)
+      assert(flat.kernel(in, n2(v)).toLongArray().toSeq == want)
+      val probed = nearest(v, supCents, supIds).head
+      assert(twoLevel.kernel(in, n2(v)).toLongArray().toSeq ==
+        want.filter(id => supOf(ids.indexOf(id)) == probed))
+    }
+    // non-overflowing products keep the single rounding of the exact
+    // long product (the SQL CAST(n2 * cn2 AS DOUBLE))
+    val big = (1L << 53) + 1
+    assert(VectorKernels.normProduct(big, 1L) == big.toDouble)
+    assert(VectorKernels.normProduct(1L << 31, 1L << 32) == math.pow(2, 63))
+    assert(VectorKernels.normProduct(Long.MaxValue, 3L) == Long.MaxValue.toDouble * 3.0)
+  }
 }
 
 /** Latches for the withBuild-cancellation test: a top-level object so
